@@ -152,13 +152,16 @@ def _update_centroids(assigned: DataFrame, prev: list[list[float]]
     elementwise identical between NumPy doubles and any engine's
     scalar path. The whole sum struct is ONE F.expr (a single py4j
     call + one flat parse, not dim Column round-trips — matters at
-    dim=768)."""
+    dim=768). Elements are read with ``get()``: on a vector shorter
+    than dim the missing positions are NULL and drop out of the sum
+    (ANSI ``v[d]`` would throw INVALID_ARRAY_INDEX), as in
+    ``_update_centroids_multi``."""
     import numpy as np
 
     dim = len(prev[0])
     sums = ", ".join(
-        f"sum(cast(round(cast(v[{d}] as double) * {_SCALE}, 0) as bigint))"
-        for d in range(dim))
+        f"sum(cast(round(cast(get(v, {d}) as double) * {_SCALE}, 0)"
+        f" as bigint))" for d in range(dim))
     rows = (
         assigned.groupBy("cl")
         .agg(F.expr(f"struct({sums})").alias("s"),

@@ -20,48 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataprofiler_spark.session import checkpoint_tracking, release_rdds
+
 SRC_KEYWORDS = ("source", "src", "from", "node_id_1", "start")
 DST_KEYWORDS = ("target", "destination", "dst", "to", "node_id_2", "end")
-
-
-def _persistent_rdd_ids(sc) -> set[int]:
-    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def _checkpoint_tracking(df: DataFrame, eager: bool = True
-                         ) -> tuple[DataFrame, set[int]]:
-    """localCheckpoint ``df``; also return the ids of the RDDs
-    the checkpoint persisted, so the caller can release them once the
-    snapshot is superseded. ``eager=False`` defers materialization to
-    the caller's NEXT action over the frame (the persistent-RDD id
-    registers at persist time, so the tracking works either way) — use
-    it when the loop already runs an action per round that reads the
-    frame, saving one full job per iteration (r13,
-    connected_components' convergence check).
-
-    localCheckpoint persists its materialized RDD and nothing ever
-    unpersists it — in an iterative loop that leaks one MEMORY_AND_DISK
-    snapshot of the full label frame PER ROUND until the JVM
-    ContextCleaner happens to collect them. On a long-lived session at
-    scale that is an unbounded storage-memory leak, so each round frees
-    the snapshot it supersedes (AFTER the last job that reads it — a
-    localCheckpoint's lineage is truncated, so unpersisting it while
-    still referenced loses the data, it cannot be recomputed); only the
-    FINAL checkpoint (which backs the returned frame) is left to the
-    ContextCleaner."""
-    sc = df.sparkSession.sparkContext
-    before = _persistent_rdd_ids(sc)
-    out = df.localCheckpoint(eager=eager)
-    added = _persistent_rdd_ids(sc) - before
-    return out, added
-
-
-def _release_rdds(sc, ids: set[int]) -> None:
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in ids:
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
 
 
 def detect_edge_columns(columns: list[str]) -> tuple[str, str] | None:
@@ -148,13 +110,13 @@ def connected_components(edges: DataFrame, src: str, dst: str,
             # materializing action — an eager checkpoint spent a whole
             # extra job per round storing blocks the very next job
             # re-read. Lineage is truncated either way.
-            new_labels, added = _checkpoint_tracking(new_labels,
-                                                     eager=False)
+            new_labels, added = checkpoint_tracking(new_labels,
+                                                    eager=False)
             changed = (new_labels.alias("n")
                        .join(labels.alias("o"), "node")
                        .where(F.col("n.component") != F.col("o.component"))
                        .limit(1).count())
-            _release_rdds(new_labels.sparkSession.sparkContext, ckpt_ids)
+            release_rdds(new_labels.sparkSession.sparkContext, ckpt_ids)
             ckpt_ids = added
             labels = new_labels
             if changed == 0:
@@ -226,8 +188,8 @@ def pagerank(edges: DataFrame, src: str, dst: str, iters: int = 3,
                          .cast("long").alias("r")))
         # truncate growing lineage; the eager checkpoint is the last job
         # that reads the previous round's snapshot, so it can be freed
-        ranks, added = _checkpoint_tracking(ranks)
-        _release_rdds(ranks.sparkSession.sparkContext, ckpt_ids)
+        ranks, added = checkpoint_tracking(ranks)
+        release_rdds(ranks.sparkSession.sparkContext, ckpt_ids)
         ckpt_ids = added
     return ranks.select("node",
                         F.round(F.col("r") / F.lit(1e9), round_digits)

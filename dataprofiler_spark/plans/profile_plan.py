@@ -357,19 +357,30 @@ class Profiler:
             if target < n:
                 df = df.sample(sampling_meta["fraction"],
                                seed=opt.sample_seed)
-        from dataprofiler_spark.session import ensure_parallelism
+        from dataprofiler_spark.session import (checkpoint_tracking,
+                                                ensure_parallelism,
+                                                release_rdds)
         ens = ensure_parallelism(df)
-        if ens is not df:
-            # Under-partitioned LOCAL input (one small parquet split):
-            # materialize the round-robin exchange once so every
-            # wide-agg group job and the counts pass reuse the same
-            # partitioning instead of each re-running a full-width
-            # exchange (lineitem sf0.1 cold min-of-3: 5.8 s → 4.8 s).
-            # At real scale ensure_parallelism is a no-op and nothing
-            # is ever materialized.
-            ens = ens.localCheckpoint(eager=True)
-        df = ens
+        if ens is df:
+            return self._profile_frame(df, sampling_meta)
+        # Under-partitioned LOCAL input (one small parquet split):
+        # materialize the round-robin exchange once so every wide-agg
+        # group job and the counts pass reuse the same partitioning
+        # instead of each re-running a full-width exchange (lineitem
+        # sf0.1 cold min-of-3: 5.8 s → 4.8 s). At real scale
+        # ensure_parallelism is a no-op and nothing is ever
+        # materialized. The blocks are released once the last pass
+        # over them has run — otherwise every profiled chunk (every
+        # streaming micro-batch) pins one more snapshot.
+        ens, ckpt = checkpoint_tracking(ens)
+        try:
+            return self._profile_frame(ens, sampling_meta)
+        finally:
+            release_rdds(ens.sparkSession.sparkContext, ckpt)
 
+    def _profile_frame(self, df: DataFrame,
+                       sampling_meta: dict) -> DatasetState:
+        opt = self.options
         fields = df.schema.fields
         numeric_cols = [f.name for f in fields if isinstance(f.dataType, NumericType)]
         string_cols = [f.name for f in fields if isinstance(f.dataType, StringType)]

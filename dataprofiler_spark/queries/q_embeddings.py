@@ -184,9 +184,9 @@ def ann_index_pq_query_embeddings(spark, sf_dir):
     """END-TO-END persisted IVF-PQ (VERDICT r9 item 9): ivf_build with
     pq_m stores each vector's m PQ codes next to (id, centroid) in the
     partitioned parquet layout plus the codebooks as a JSON sidecar;
-    ivf_query_adc serves asymmetric-distance top-k from the PRUNED
-    code columns — the scan reads (id, centroid, code0..3) and never
-    the fp32 vectors (ReadSchema-asserted in test_mllib_ops). The
+    ivf_query_adc serves asymmetric-distance top-k from the resident
+    index handle — it loads (id, code0..3) of the probed cells only and
+    never the fp32 vectors (asserted in test_mllib_ops). The
     oracle is the inline ivf_pq_topk chain for the same settings with
     n_queries=1 — the persisted artifact must rank identically to the
     in-memory plan it serializes."""

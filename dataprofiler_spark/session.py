@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Tuned for correctness at any scale; sizes that are cluster-dependent are
 # left overridable via normal Spark conf mechanisms.
@@ -99,6 +99,47 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     if df.rdd.getNumPartitions() < max(target // 2, 2):
         return df.repartition(target)
     return df
+
+
+def _persistent_rdd_ids(sc) -> set[int]:
+    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def checkpoint_tracking(df: DataFrame, eager: bool = True
+                        ) -> tuple[DataFrame, set[int]]:
+    """localCheckpoint ``df``; also return the ids of the RDDs
+    the checkpoint persisted, so the caller can release them with
+    :func:`release_rdds` once the snapshot is no longer read.
+    ``eager=False`` defers materialization to the caller's NEXT action
+    over the frame (the persistent-RDD id registers at persist time, so
+    the tracking works either way) — use it when the caller already
+    runs an action that reads the frame, saving one full job (r13,
+    connected_components' convergence check).
+
+    localCheckpoint persists its materialized RDD and nothing ever
+    unpersists it — in an iterative loop (graph.py) or a per-micro-batch
+    profile (plans/profile_plan.py) that leaks one MEMORY_AND_DISK
+    snapshot PER ROUND until the JVM ContextCleaner happens to collect
+    them. On a long-lived session at scale that is an unbounded
+    storage-memory leak, so callers free each snapshot AFTER the last
+    job that reads it — a localCheckpoint's lineage is truncated, so
+    unpersisting it while still referenced loses the data, it cannot be
+    recomputed."""
+    sc = df.sparkSession.sparkContext
+    before = _persistent_rdd_ids(sc)
+    out = df.localCheckpoint(eager=eager)
+    added = _persistent_rdd_ids(sc) - before
+    return out, added
+
+
+def release_rdds(sc, ids: set[int]) -> None:
+    """Unpersist (non-blocking) the persisted RDDs ``ids`` returned by
+    :func:`checkpoint_tracking`; ids already gone are skipped."""
+    jmap = sc._jsc.getPersistentRDDs()
+    for rid in ids:
+        jrdd = jmap.get(rid)
+        if jrdd is not None:
+            jrdd.unpersist(False)
 
 
 def explode_no_prefilter(df, array_col, alias: str, *keep: str):

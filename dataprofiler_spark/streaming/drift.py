@@ -183,17 +183,28 @@ class StreamingDriftMonitor:
         smoothing on both sides (same formula the r12 per-column Spark
         aggregate computed; moved to the driver over the single-pass
         melted counts — bounded by max_categories, and float-sum order
-        differences land below the round_digits rounding)."""
+        differences land below the round_digits rounding).
+
+        NULL follows drift.categorical_psi, whose full outer join on
+        ``value`` never matches NULL to NULL: a baseline NULL and a
+        batch NULL are two categories, each with count 0 on the other
+        side."""
         base = dict(self._cat_counts[col])
-        keys = sorted((set(base) | set(batch)),
-                      key=lambda v: (v is not None, v))
-        k = len(keys)
-        na = sum(base.values())
-        nb = sum(batch.values())
+        batch = dict(batch)
+        base_null, batch_null = base.pop(None, None), batch.pop(None, None)
+        pairs = [(base.get(key, 0), batch.get(key, 0))
+                 for key in sorted(set(base) | set(batch))]
+        if base_null is not None:
+            pairs.append((base_null, 0))
+        if batch_null is not None:
+            pairs.append((0, batch_null))
+        k = len(pairs)
+        na = sum(a for a, _ in pairs)
+        nb = sum(b for _, b in pairs)
         psi = 0.0
-        for key in keys:
-            pa = (base.get(key, 0) + 1) / (na + k)
-            pb = (batch.get(key, 0) + 1) / (nb + k)
+        for ca, cb in pairs:
+            pa = (ca + 1) / (na + k)
+            pb = (cb + 1) / (nb + k)
             psi += (pb - pa) * math.log(pb / pa)
         return round(psi, self.round_digits)
 

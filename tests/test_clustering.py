@@ -683,6 +683,61 @@ def test_two_level_cells_edge_shapes(spark):
     assert set(kept) == expect
 
 
+def _update_centroids_posexplode(assigned, prev):
+    """The r12 two-shuffle ``_update_centroids`` shape: integer partial
+    sums per (cluster, position) from ``posexplode``, re-assembled into
+    one array row per cluster."""
+    import numpy as np
+
+    rows = (
+        assigned.select("cl", F.posexplode("v").alias("pos", "x"))
+        .groupBy("cl", "pos")
+        .agg(F.sum(F.round(F.col("x").cast("double") * cl._SCALE, 0)
+                   .cast("long")).alias("s"),
+             F.count(F.lit(1)).alias("n"))
+        .groupBy("cl")
+        .agg(F.transform(F.array_sort(F.collect_list(F.struct("pos", "s"))),
+                         lambda x: x["s"]).alias("s"),
+             F.first("n").alias("n"))
+        .collect())
+    cents = [list(c) for c in prev]
+    for r in rows:
+        s = np.asarray(list(r["s"]), dtype=np.float64)
+        cents[r["cl"]] = ((s / float(r["n"])) / cl._SCALE).tolist()
+    return cents
+
+
+def test_update_centroids_wide_agg_matches_posexplode(spark):
+    """The one-shuffle wide struct-of-sums update (r13) must give
+    bit-identical centroids to the posexplode shape it replaced, over
+    the same assigned frame — including an empty cluster, which keeps
+    its previous centroid."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    n, dim, k = 200, 8, 4
+    rows = [(i % 3, [float(x) for x in rng.normal(0, 1, dim)])
+            for i in range(n)]          # cluster 3 stays empty
+    assigned = spark.createDataFrame(rows, "cl int, v array<double>")
+    prev = [[float(x) for x in rng.normal(0, 1, dim)] for _ in range(k)]
+    wide = cl._update_centroids(assigned, prev)
+    assert wide == _update_centroids_posexplode(assigned, prev)
+    assert wide[3] == prev[3]
+
+
+def test_update_centroids_ragged_vectors(spark):
+    """A vector shorter than dim contributes to the positions it has
+    and nothing to the rest (the row still counts in n) — the
+    ``get()`` semantics of _update_centroids_multi — instead of
+    throwing INVALID_ARRAY_INDEX."""
+    rows = [(0, [1.0, 2.0, 3.0]), (0, [3.0, 4.0]), (0, [5.0, 6.0, 9.0]),
+            (1, [0.5, 0.25, 0.75]), (1, [1.5])]
+    assigned = spark.createDataFrame(rows, "cl int, v array<double>")
+    got = cl._update_centroids(assigned, [[0.0] * 3, [0.0] * 3])
+    assert got == [[9.0 / 3, 12.0 / 3, 12.0 / 3],
+                   [2.0 / 2, 0.25 / 2, 0.75 / 2]]
+
+
 def test_kmeans_fit_multi_matches_sequential(spark):
     """The fused multi-spec fit (r12: one init collect + one scan per
     Lloyd round for ALL specs) must reproduce m independent

@@ -187,7 +187,8 @@ def test_ivf_pq_persisted_matches_inline(spark, sf_dir, tmp_path):
     """The durable IVF-PQ path (ivf_build(pq_m=..) + ivf_query_adc) must
     reproduce clustering.ivf_pq_topk's ranking exactly for the same
     settings — same coarse cells, same codebooks, same fixed-point ADC
-    tables — and its pruned scan must never read the vector column."""
+    tables — and its resident handle must load only the probed cells
+    and never the vector column."""
     from dataprofiler_spark.operators import ann_index as ai
     from dataprofiler_spark.operators import clustering as cl
 
@@ -209,11 +210,11 @@ def test_ivf_pq_persisted_matches_inline(spark, sf_dir, tmp_path):
     assert ([(r["rank"], r["vec_id"], r["approx_d"]) for r in persisted]
             == [(r["rank"], r["vec_id"], r["approx_d"]) for r in inline])
 
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted")
-    assert "PartitionFilters" in plan and "centroid" in plan, plan
-    # the serving scan reads codes, never the stored fp32 vectors
-    assert "embedding" not in plan.split("ReadSchema")[1][:200], plan
+    # one nprobe=2 query loads exactly the 2 probed cells, and the
+    # loaded tables hold codes, never the stored fp32 vectors
+    cells = ai._resident(path).cells
+    assert len(cells) == 2, sorted(cells)
+    assert all("embedding" not in t.column_names for t in cells.values())
 
     # unbuilt-PQ index refuses ADC queries loudly
     plain = str(tmp_path / "plain")
@@ -221,6 +222,144 @@ def test_ivf_pq_persisted_matches_inline(spark, sf_dir, tmp_path):
                  quantizer="det", iters=1)
     with pytest.raises(ValueError, match="pq_m"):
         ai.ivf_query_adc(spark, plain, list(qrow["embedding"]))
+
+
+def _adc_rows(df):
+    return [(r["rank"], r["vec_id"], r["approx_d"]) for r in df.collect()]
+
+
+def test_ivf_pq_rebuild_same_path_serves_new_index(spark, sf_dir,
+                                                   tmp_path):
+    """A rebuild at the same path writes a fresh build_id; the next
+    query must answer from the new index, not the resident handle of
+    the old one."""
+    from dataprofiler_spark.operators import ann_index as ai
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    flipped = emb.select(
+        (F.col("vec_id") + 100_000).alias("vec_id"),
+        F.transform("embedding", lambda x: -x).alias("embedding"))
+    cfg = dict(n_centroids=4, iters=1, pq_m=4, pq_codes=4, pq_iters=1)
+    q = [float(x) for x in emb.orderBy("vec_id").head()["embedding"]]
+    path = str(tmp_path / "idx")
+
+    ai.ivf_build(emb, "vec_id", "embedding", path, **cfg)
+    before = _adc_rows(ai.ivf_query_adc(spark, path, q, k=5))
+    old_id = ai.ivf_meta(path)["build_id"]
+    ai.ivf_build(flipped, "vec_id", "embedding", path, **cfg)
+    assert ai.ivf_meta(path)["build_id"] != old_id
+    after = _adc_rows(ai.ivf_query_adc(spark, path, q, k=5))
+
+    fresh = str(tmp_path / "fresh")
+    ai.ivf_build(flipped, "vec_id", "embedding", fresh, **cfg)
+    assert after == _adc_rows(ai.ivf_query_adc(spark, fresh, q, k=5))
+    assert all(v < 100_000 for _, v, _ in before)
+    assert all(v >= 100_000 for _, v, _ in after)
+
+
+def test_ivf_pq_empty_cell_exclude_and_short_result(spark, tmp_path):
+    """exclude_id, a probed cell with no vectors, and k above the
+    candidate count, against clustering.ivf_pq_topk. Ids 0 and 1 share
+    a vector, so the deterministic k-means seeds centroids 0 and 1 at
+    the same point; every tie goes to centroid 0 and cell 1 stays
+    empty, yet the query (id 0) probes it second."""
+    from dataprofiler_spark.operators import ann_index as ai
+    from dataprofiler_spark.operators import clustering as cl
+
+    a, b = [0.0, 0.0, 0.0, 0.0], [10.0, 10.0, 10.0, 10.0]
+    vecs = [a, a, b, [1.0, 0.0, 0.0, 0.0], [-1.0, 0.0, 0.0, 0.0],
+            [11.0, 10.0, 10.0, 10.0], [9.0, 10.0, 10.0, 10.0]]
+    df = spark.createDataFrame(list(enumerate(vecs)),
+                               "vec_id long, embedding array<double>")
+    path = str(tmp_path / "idx")
+    ai.ivf_build(df, "vec_id", "embedding", path, n_centroids=3,
+                 iters=1, pq_m=2, pq_codes=2, pq_iters=1)
+    assert not os.path.isdir(os.path.join(path, "vectors", "centroid=1"))
+
+    inline = cl.ivf_pq_topk(df, "vec_id", "embedding", k_clusters=3,
+                            iters=1, m=2, k_codes=2, pq_iters=1,
+                            nprobe=2, n_queries=1, k=50, dim=4).collect()
+    out = _adc_rows(ai.ivf_query_adc(spark, path, a, k=50, nprobe=2,
+                                     exclude_id=0))
+    assert out == [(r["rank"], r["vec_id"], r["approx_d"])
+                   for r in inline]
+    assert [v for _, v, _ in out] and 0 not in [v for _, v, _ in out]
+    assert sorted(ai._resident(path).cells) == [0, 1]
+    assert ai._resident(path).cells[1].num_rows == 0
+
+
+def test_ivf_query_adc_schema_and_no_spark_job(spark, sf_dir, tmp_path):
+    """The result schema is the one the Spark plan produced, and
+    neither the query nor collecting its result runs a Spark job."""
+    from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                                   StructField, StructType)
+
+    from dataprofiler_spark.operators import ann_index as ai
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    path = str(tmp_path / "idx")
+    ai.ivf_build(emb, "vec_id", "embedding", path, n_centroids=4,
+                 iters=1, pq_m=4, pq_codes=4, pq_iters=1)
+    q = [float(x) for x in emb.orderBy("vec_id").head()["embedding"]]
+    sc = spark.sparkContext
+    sc.setJobGroup("adc-serving", "ivf_query_adc")
+    try:
+        out = ai.ivf_query_adc(spark, path, q, k=5, nprobe=2)
+        rows = out.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("adc-serving")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out.schema == StructType([
+        StructField("rank", IntegerType(), False),
+        StructField("vec_id", LongType(), True),
+        StructField("approx_d", DoubleType(), True)])
+    assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
+    assert jobs == []
+
+
+def test_ivf_query_adc_concurrent_threads(spark, sf_dir, tmp_path,
+                                          monkeypatch):
+    """More serving threads than cores over two indexes, with a short
+    switch interval: every answer equals the single-threaded one, and
+    each probed cell of each index is loaded exactly once."""
+    import collections
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from dataprofiler_spark.operators import ann_index as ai
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    paths = [str(tmp_path / f"idx{i}") for i in range(2)]
+    for i, path in enumerate(paths):
+        ai.ivf_build(emb, "vec_id", "embedding", path, n_centroids=4 + i,
+                     iters=1, pq_m=4, pq_codes=4, pq_iters=1)
+    qs = [[float(x) for x in r["embedding"]]
+          for r in emb.orderBy("vec_id").limit(6).collect()]
+    jobs = [(p, q) for p in paths for q in qs] * 4
+
+    loads = collections.Counter()
+    load_cell = ai._IvfHandle._load_cell
+
+    def counting(self, c):
+        loads[(self.path, c)] += 1
+        return load_cell(self, c)
+
+    monkeypatch.setattr(ai._IvfHandle, "_load_cell", counting)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max(8, 2 * (os.cpu_count() or 1))) as ex:
+            got = list(ex.map(
+                lambda pq: _adc_rows(ai.ivf_query_adc(
+                    spark, pq[0], pq[1], k=5, nprobe=2)), jobs,
+                timeout=300))
+    finally:
+        sys.setswitchinterval(old)
+    want = [_adc_rows(ai.ivf_query_adc(spark, p, q, k=5, nprobe=2))
+            for p, q in jobs]
+    assert got == want
+    assert loads and set(loads.values()) == {1}, loads
 
 
 def test_embedding_decontaminate_semantics(spark, sf_dir):

@@ -19,9 +19,13 @@ SF001_PINNED = {"cnn_labeler_customer", "ner_spans_orders",
                 "cnn_head_tuned_customer"}
 
 
-@pytest.mark.nightly
-@pytest.mark.parametrize("name", sorted(SPARK_QUERIES))
-def test_query_matches_oracle(name, spark, duck, sf_dir):
+# Rows replayed in the default (non-nightly) gate: both persisted-ANN
+# serving paths, plus one profile row and one curation row.
+GATE_ROWS = ["ann_index_pq_query_embeddings", "ann_index_query_embeddings",
+             "numeric_profile_orders", "corpus_curation_documents"]
+
+
+def _check_row(name, spark, duck, sf_dir):
     sdf = SPARK_QUERIES[name](spark, sf_dir).toPandas()
     if name not in ORACLE_SQL or (
             name in SF001_PINNED and not sf_dir.rstrip("/").endswith("sf0.01")):
@@ -29,6 +33,18 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
         return
     ddf = duck.sql(ORACLE_SQL[name]).df()
     assert_frames_match(sdf, ddf, name)
+
+
+@pytest.mark.nightly
+@pytest.mark.parametrize("name", sorted(SPARK_QUERIES))
+def test_query_matches_oracle(name, spark, duck, sf_dir):
+    _check_row(name, spark, duck, sf_dir)
+
+
+@pytest.mark.parametrize("name", GATE_ROWS)
+def test_gate_row_matches_oracle(name, spark, duck, sf_dir):
+    assert name in ORACLE_SQL and name not in SF001_PINNED
+    _check_row(name, spark, duck, sf_dir)
 
 
 def test_driver_window_all_oracled():

@@ -43,6 +43,19 @@ def test_profile_report_shape(spark, lineitem):
     assert sd["statistics"]["min_datetime"] is not None
 
 
+def test_single_file_profiles_release_checkpoint_blocks(spark, sf_dir):
+    """A single-file input is under-partitioned, so the plan
+    localCheckpoints it; the snapshot must be released once the profile
+    is built, not pinned for the life of the session."""
+    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    assert orders.rdd.getNumPartitions() == 1
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        Profiler(orders).profile()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_merge_invariance(spark, lineitem):
     whole = Profiler(lineitem).profile()
     half1 = lineitem.where(F.col("l_orderkey") % 2 == 0)

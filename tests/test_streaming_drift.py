@@ -14,11 +14,21 @@ from dataprofiler_spark.operators import drift
 from dataprofiler_spark.streaming.drift import StreamingDriftMonitor
 
 
+def _orders(spark, sf_dir):
+    """orders plus ``o_status_null``: o_orderstatus, NULL on the ~2%
+    of rows with o_custkey % 50 == 0 — a categorical column with NULLs
+    on both the baseline and the batch side."""
+    src = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    return src.withColumn(
+        "o_status_null",
+        F.when(F.col("o_custkey") % 50 != 0, F.col("o_orderstatus")))
+
+
 @pytest.fixture()
 def split_orders(tmp_path, spark, sf_dir):
     """orders split into two parquet batch files: b0 ~ the baseline
     distribution, b1 deliberately shifted (only URGENT priority)."""
-    src = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    src = _orders(spark, sf_dir)
     flat = str(tmp_path / "stream")
     os.makedirs(flat)
     (src.where(F.col("o_orderkey") % 2 == 0).coalesce(1)
@@ -36,9 +46,10 @@ def split_orders(tmp_path, spark, sf_dir):
 
 
 def test_streaming_psi_matches_batch_operator(spark, sf_dir, split_orders):
-    baseline = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    baseline = _orders(spark, sf_dir)
     mon = StreamingDriftMonitor(
         baseline, {"o_orderpriority": "categorical",
+                   "o_status_null": "categorical",
                    "o_totalprice": "numeric"},
         alert_threshold=0.2)
     schema = baseline.schema
@@ -66,6 +77,14 @@ def test_streaming_psi_matches_batch_operator(spark, sf_dir, split_orders):
     expected = drift.categorical_psi(
         baseline, b1, "o_orderpriority").collect()[0]["psi"]
     assert cat1 == pytest.approx(expected, abs=2e-6)
+    # NULLs on both sides: the batch operator keeps a baseline NULL and
+    # a batch NULL as two categories, and so must the monitor
+    b0 = baseline.where(F.col("o_orderkey") % 2 == 0)
+    for e, b in ((e0, b0), (e1, b1)):
+        expected = drift.categorical_psi(
+            baseline, b, "o_status_null").collect()[0]["psi"]
+        assert e["psi"]["o_status_null"] == pytest.approx(expected,
+                                                          abs=2e-6)
 
     # numeric: same-distribution batch scores near zero with frozen edges
     num0 = e0["psi"]["o_totalprice"]
